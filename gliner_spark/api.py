@@ -18,6 +18,8 @@ of the reference's Span struct (gliner_structs.hpp:64-70).
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import partial
 from typing import List, Sequence
 
 from pyspark.sql import DataFrame
@@ -25,11 +27,7 @@ from pyspark.sql import DataFrame
 from .config import SPAN_LEVEL, TOKEN_LEVEL, GlinerConfig
 from .kernels.decode import Span
 from .kernels.pipeline import ner_documents
-from .kernels.scorer import (
-    SurrogateScorer,
-    TokenSurrogateScorer,
-    make_scorer,
-)
+from .kernels.scorer import make_scorer
 from .kernels.tokenize import tokenize_text
 from .operators.ner import extract_mentions
 
@@ -53,15 +51,15 @@ class GlinerModel:
         self.config = GlinerConfig(
             max_width=max_width, max_length=max_length, model_type=model_type
         )
-        if model_type == TOKEN_LEVEL and model_path is None:
-            self._scorer = TokenSurrogateScorer()
-        else:
-            self._scorer = make_scorer(
-                max_width, model_path, tokenizer_path, device_id=device_id
-            )
+        # a partial over plain values, so inference_df ships it to the
+        # executors without self (and its live scorer session)
+        self._scorer_factory = partial(
+            make_scorer, max_width, model_path, tokenizer_path,
+            device_id=device_id, model_type=model_type,
+        )
+        self._scorer = self._scorer_factory()
         self._model_path = model_path
         self._tokenizer_path = tokenizer_path
-        self._device_id = device_id
 
     @classmethod
     def from_pretrained(cls, model_dir: str, device_id: int = -1):
@@ -122,14 +120,8 @@ class GlinerModel:
 
             print("WARNING! Empty texts or entities.", file=sys.stderr)
             return []
-        cfg = GlinerConfig(
-            max_width=self.config.max_width,
-            max_length=self.config.max_length,
-            model_type=self.config.model_type,
-            flat_ner=flat_ner,
-            threshold=threshold,
-            multi_label=multi_label,
-        )
+        cfg = replace(self.config, flat_ner=flat_ner, threshold=threshold,
+                      multi_label=multi_label)
         return ner_documents(texts, entities, self._scorer, cfg)
 
     # --- distributed twin ---
@@ -143,25 +135,9 @@ class GlinerModel:
         threshold: float = 0.5,
         multi_label: bool = False,
     ) -> DataFrame:
-        cfg = GlinerConfig(
-            max_width=self.config.max_width,
-            max_length=self.config.max_length,
-            model_type=self.config.model_type,
-            flat_ner=flat_ner,
-            threshold=threshold,
-            multi_label=multi_label,
-        )
-        mp, tp, mw = self._model_path, self._tokenizer_path, cfg.max_width
-        mt, dev = cfg.model_type, self._device_id
-
-        def factory():
-            if mt == TOKEN_LEVEL and mp is None:
-                return TokenSurrogateScorer()
-            if mp:
-                return make_scorer(mw, mp, tp, device_id=dev)
-            return SurrogateScorer(mw)
-
+        cfg = replace(self.config, flat_ner=flat_ner, threshold=threshold,
+                      multi_label=multi_label)
         return extract_mentions(
             pages, entities, id_col=id_col, text_col=text_col, config=cfg,
-            scorer_factory=factory,
+            scorer_factory=self._scorer_factory,
         )

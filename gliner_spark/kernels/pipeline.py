@@ -18,10 +18,13 @@ Two extensions beyond the reference, both opt-in:
   tokens carry original-offset spans), dedupe seam duplicates keeping
   max prob, re-sort to generation order, then greedy once.
 
-Because the Spark ``mapInPandas`` stage calls exactly this function, the
-cluster output and the straight-line single-process output are the same
-code path — the P/R-vs-reference gate (BASELINE.json:metric) is then a
-structural identity, measured (not assumed) by bench's parity check.
+The one Spark NER stage (``operators/ner.py::_ner_stage``, behind both
+``extract_mentions`` and ``extract_triples_fused``) calls exactly this
+function, with the scorer picked by the one rule in
+``scorer.make_scorer`` — so the cluster output and the straight-line
+single-process output are the same code path, and the P/R-vs-reference
+gate (BASELINE.json:metric) is then a structural identity, measured (not
+assumed) by bench's parity check.
 """
 
 from __future__ import annotations

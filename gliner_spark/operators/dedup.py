@@ -342,13 +342,15 @@ def paragraph_dedup(
     partition instead of one task's full sort buffer (r5 ADVICE). The
     join back to flag keepers is probe-heavy on the same hot keys, but
     the build side is one row per paragraph and AQE's skew-join split
-    can divide the probe side — measured (tools/paragraph_probe.py,
-    r7): the split fires only past BOTH gates (partition > 256 MB AND
-    > 5× median), so a 10^7-repetition hot key still runs whole
-    (skew 1.7, outputs identical to the window plan, groupby ≤ window
-    on wall at every probed scale); past the gates the split is
-    available to this join while NO skew optimization ever applies to
-    a window sort. Then one groupBy(doc_id) reassembly shuffle."""
+    can divide the probe side. Measured (tools/paragraph_probe.py, r7):
+    the split does NOT fire below the combined gate (partition > 256 MB
+    AND > 5× median) — a 10^7-repetition hot key, ~450 MB but under 5×
+    median, still runs whole (skew 1.7, outputs identical to the window
+    plan, groupby ≤ window on wall at every probed scale). Past both
+    gates the split is available to this join (observed firing on a
+    sort-merge join in tools/salt_probe.py, not in this probe), while NO
+    skew optimization ever applies to a window sort. Then one
+    groupBy(doc_id) reassembly shuffle."""
     words = F.split(F.col(text_col), " ")
     if window_words is not None:
         n_seg = F.ceil(F.size(words) / F.lit(window_words)).cast("int")

@@ -12,26 +12,27 @@ join-formulation has at scale:
 - no mentions shuffle at all — the flagship pages→triples job becomes
   scan → one Python stage → sink, embarrassingly parallel.
 
-Semantics are identical to ``extract_relations`` over
-``extract_mentions`` (asserted by tests/test_fused.py); the modular
-operators remain the right choice when the mentions table itself is a
-materialized product (linking, dedup, checkpointing consume it).
+It is not a second NER stage: ``extract_triples_fused`` runs
+``operators/ner.py``'s one Arrow stage, with its scorer rule, and only
+swaps the per-document emit (``relations_for_doc``) and the output
+schema. Semantics are identical to ``extract_relations`` over
+``extract_mentions`` for every ``model_type`` (asserted by
+tests/test_fused.py); the modular operators remain the right choice when
+the mentions table itself is a materialized product (linking, dedup,
+checkpointing consume it).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence, Tuple
+from functools import partial
+from typing import List, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import GlinerConfig
-from ..kernels.pipeline import ner_documents
-from ..kernels.scorer import SurrogateScorer
 from ..schemas import TRIPLES
+from .ner import _ner_stage
 from .relations import DEFAULT_RULES, DEFAULT_WINDOW_BYTES
-from .util import ensure_parallelism
 
 
 def relations_for_doc(
@@ -68,35 +69,8 @@ def extract_triples_fused(
     scorer_factory=None,
 ) -> DataFrame:
     """pages → triples, single mapInPandas stage (no shuffle)."""
-    labels = list(labels)
     rule_map = {(s, o): p for s, o, p in rules}
-    factory = scorer_factory or (lambda: SurrogateScorer(config.max_width))
-
-    src = ensure_parallelism(
-        pages.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
+    return _ner_stage(
+        pages, labels, id_col, text_col, config, scorer_factory, TRIPLES,
+        partial(relations_for_doc, rules=rule_map, window_bytes=window_bytes),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory()
-        cols = [
-            "doc_id", "subj", "subj_label", "subj_start", "pred",
-            "obj", "obj_label", "obj_start", "prob",
-        ]
-        for pdf in batches:
-            rows: List[tuple] = []
-            spans_batch = ner_documents(
-                pdf["text"].tolist(), labels, scorer, config
-            )
-            for doc_id, spans in zip(pdf["doc_id"], spans_batch):
-                for rel in relations_for_doc(spans, rule_map, window_bytes):
-                    rows.append((doc_id, *rel))
-            out = pd.DataFrame(rows, columns=cols)
-            out["subj_start"] = out["subj_start"].astype("int64")
-            out["obj_start"] = out["obj_start"].astype("int64")
-            out["prob"] = out["prob"].astype("float64")
-            yield out
-
-    return src.mapInPandas(run, schema=TRIPLES)

@@ -13,8 +13,6 @@ explicit salt is the answer (SURVEY.md §4):
   [0, n_salts) on hot keys (0 on cold); small side is exploded ×n_salts
   for hot keys only. Join on (key, salt). Result set identical to the
   plain join; the hot key's rows now spread over n_salts reducers.
-- ``salted_group_count``: two-phase aggregation (partial by (key, salt),
-  final by key) for skewed groupBys whose aggregate is reassociable.
 """
 
 from __future__ import annotations
@@ -80,29 +78,3 @@ def salted_equi_join(
     s = s.withColumn("_salt", F.explode("_salts")).drop("_salts")
 
     return b.join(s, [key, "_salt"], how).drop("_salt")
-
-
-def salted_group_count(
-    df: DataFrame, key: str, n_salts: int = 8,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Skew-proof ``groupBy(key).count()``: partial count by (key, salt)
-    then final sum by key. (Spark's hash agg already does map-side
-    partials; this pattern matters for ``applyInPandas``-style groups and
-    is kept as the template for them.)
-
-    Same PRECONDITION as salted_equi_join: rows within a hot key must
-    differ on some salted column — pass ``salt_cols`` with a per-row
-    discriminator when ``df`` is a key-only projection."""
-    salted = df.withColumn(
-        "_salt",
-        # pure function of the row (see salted_equi_join): retry-safe
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in (salt_cols or df.columns)]),
-            F.lit(n_salts),
-        ),
-    )
-    partial = salted.groupBy(key, "_salt").agg(
-        F.count(F.lit(1)).alias("_partial")
-    )
-    return partial.groupBy(key).agg(F.sum("_partial").alias("n"))

@@ -4,7 +4,7 @@
 import pytest
 
 from gliner_spark.api import GlinerModel
-from gliner_spark.config import TOKEN_LEVEL
+from gliner_spark.config import SPAN_LEVEL, TOKEN_LEVEL
 
 
 def test_inference_kyiv_golden_like_reference_example():
@@ -58,8 +58,9 @@ def spark():
     s.stop()
 
 
-def test_inference_df_matches_local(spark):
-    model = GlinerModel()
+@pytest.mark.parametrize("model_type", [SPAN_LEVEL, TOKEN_LEVEL])
+def test_inference_df_matches_local(spark, model_type):
+    model = GlinerModel(model_type=model_type)
     texts = [
         "Kyiv is the capital of Ukraine.",
         "Elon Musk visited Paris and Kyiv near the Dnipro.",
@@ -73,11 +74,11 @@ def test_inference_df_matches_local(spark):
     got = {}
     for r in rows:
         got.setdefault(r.doc_id, []).append(
-            (r.m_start, r.m_end, r.m_text, r.label)
+            (r.m_start, r.m_end, r.m_text, r.label, r.prob)
         )
     for i, spans in enumerate(local):
         assert sorted(got[f"u{i}"]) == sorted(
-            (s[0], s[1], s[2], s[3]) for s in spans
+            (s[0], s[1], s[2], s[3], round(float(s[4]), 4)) for s in spans
         )
 
 

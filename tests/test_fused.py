@@ -2,6 +2,7 @@
 
 import pytest
 
+from gliner_spark.config import TOKEN_LEVEL, GlinerConfig
 from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.operators.ner import extract_mentions
 from gliner_spark.operators.ner_fused import extract_triples_fused
@@ -25,16 +26,27 @@ def _key(r):
     )
 
 
-def test_fused_equals_modular(spark):
+@pytest.mark.parametrize(
+    "config",
+    [GlinerConfig(), GlinerConfig(model_type=TOKEN_LEVEL)],
+    ids=["span_level", "token_level"],
+)
+def test_fused_equals_modular(spark, config):
+    """Both operators pick their scorer from the config alone (no
+    factory), so a token-level config must reach the token scorer in
+    the fused path too."""
     pages = synthesize_pages(spark, 250).persist()
     modular = sorted(
         _key(r)
         for r in extract_relations(
-            extract_mentions(pages, ALL_LABELS).persist()
+            extract_mentions(pages, ALL_LABELS, config=config).persist()
         ).collect()
     )
     fused = sorted(
-        _key(r) for r in extract_triples_fused(pages, ALL_LABELS).collect()
+        _key(r)
+        for r in extract_triples_fused(
+            pages, ALL_LABELS, config=config
+        ).collect()
     )
     assert len(fused) == len(modular) > 0
     assert fused == modular

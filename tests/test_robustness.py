@@ -1,6 +1,7 @@
 """Edge cases: null/empty texts, empty inputs, single-row frames —
 every operator must degrade to empty output, never throw."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,6 +59,58 @@ def test_fused_handles_null_and_empty_text(spark, nullish_docs):
     ).collect()
     assert all(r.doc_id == "3" for r in out)
     assert len(out) > 0  # system→operator, system→artifact, operator→artifact
+
+
+def test_ner_all_empty_batch_yields_typed_empty_frame(spark):
+    """A batch whose every document emits zero rows must come out as an
+    empty frame with the schema's dtypes: only null, empty or blank
+    texts for mentions, plus a one-mention document for triples (one
+    span pairs with nothing)."""
+    from gliner_spark.operators.ner import _frame
+    from gliner_spark.schemas import MENTIONS, TRIPLES
+
+    blank = [(1, None), (2, ""), (4, "   ")]
+    schema = "doc_id long, text string"
+    one_mention = spark.createDataFrame(blank + [(5, "spark")], schema)
+    assert extract_mentions(
+        one_mention, ALL_LABELS, id_col="doc_id"
+    ).count() == 1
+    for out, spark_schema in [
+        (extract_mentions(spark.createDataFrame(blank, schema), ALL_LABELS,
+                          id_col="doc_id"), MENTIONS),
+        (extract_triples_fused(one_mention, ALL_LABELS, id_col="doc_id"),
+         TRIPLES),
+    ]:
+        assert out.collect() == []
+        assert out.schema == spark_schema
+
+    for spark_schema in (MENTIONS, TRIPLES):
+        pdf = _frame(np.array(["1", "2"], dtype=object), [[], []], spark_schema)
+        assert pdf.empty
+        assert list(pdf.columns) == spark_schema.fieldNames()
+        assert {f.name: str(pdf[f.name].dtype) for f in spark_schema} == {
+            f.name: {"string": "object", "bigint": "int64",
+                     "double": "float64"}[f.dataType.simpleString()]
+            for f in spark_schema
+        }
+
+
+def test_frame_probs_equal_per_row_round():
+    """The builder rounds once per distinct prob; the result must equal
+    ``round(float(p), 4)`` per row, for float64 and ONNX-style float32
+    probs alike."""
+    from gliner_spark.operators.ner import _probs
+
+    rng = np.random.default_rng(0)
+    base = rng.random(500)
+    for col in (
+        list(np.concatenate([base, base[:100], [0.5, 0.00005, 0.99995]])),
+        list(base.astype(np.float32)),
+        [p.item() for p in rng.choice(base, 2000)],
+    ):
+        got = _probs(col)
+        assert got.dtype == np.float64
+        assert got.tolist() == [round(float(p), 4) for p in col]
 
 
 def test_empty_dataframe_through_pipeline(spark):
