@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .linking import (
-    _pair_counts,
+    band_hashes,
+    bucket_guard,
     hash_shingles,
     minhash_signature_map,
 )
@@ -78,15 +79,25 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
 
 
 def word_shingles(text_col, k: int = 3):
-    """Distinct word k-grams (JVM-side). Short docs yield their full
-    text as the single shingle."""
-    w = F.split(text_col, " ")
-    n = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(w, i, k)),
+    """Distinct word k-grams of the " "-split text, in first-occurrence
+    order (JVM-side, codegen'd). Docs under k tokens yield their full
+    text as the single shingle; NULL text yields ``['']``.
+
+    One ``regexp_extract_all``: at every token start (the text start or
+    a position after a space) a lookahead captures the next k tokens.
+    The lookbehind tests for a space, not for "no non-space": Java
+    matches the latter between the two halves of a surrogate pair.
+    A ``transform(sequence, concat_ws(slice))`` form is a higher-order
+    function Spark interprets row by row: over the 5,000 sf0.1
+    documents (k=3, 4 cores) it took 1.66–1.85 s against 0.30–0.49 s."""
+    text = F.coalesce(text_col, F.lit(""))
+    window = "[^ ]*" + " [^ ]*" * (k - 1)
+    grams = F.regexp_extract_all(
+        text, F.lit(f"(?<=^| )(?=({window}))"), F.lit(1)
     )
-    return F.array_distinct(grams)
+    return F.array_distinct(
+        F.when(F.size(F.split(text, " ")) < k, F.array(text)).otherwise(grams)
+    )
 
 
 def _doc_shingle_exploded(docs: DataFrame, id_col: str, text_col: str,
@@ -490,47 +501,27 @@ def minhash_dups(
     """MinHash-LSH near-dup pairs, exact-verified. Scale path for
     ``ngram_jaccard_dups`` (b=32, r=4 → ~50% collision at J=0.8 per
     band set; ≥1-of-32 collision prob ≈ 1 for J ≥ 0.8)."""
-    assert n_perms % bands == 0
-    rows = n_perms // bands
     docs = ensure_parallelism(docs)
     # materialized ONCE (guide §2.4): the shingle table feeds the
-    # signature aggregation AND both sides of the final exact verify;
-    # the signature table feeds the band explode, the bucket guard and
-    # both sides of the band join. Without pinning, the r6 plan scanned
-    # documents.parquet SIX times and ran the full shingle → explode →
-    # 128-min aggregation three times (plans/r07/dedup_minhash_before:
-    # 6 Scan parquet nodes) — measured as the bulk of dedup_minhash.
+    # signature stage AND both sides of the final exact verify. Without
+    # pinning, the r6 plan scanned documents.parquet SIX times
+    # (plans/r07/dedup_minhash_before: 6 Scan parquet nodes). The
+    # signatures need no pin: both band-join sides read them through
+    # the bucket guard's one (reused) Exchange.
     sh = docs.select(
         F.col(id_col).cast("long").alias("sid"),
         word_shingles(F.col(text_col), k).alias("sh"),
     ).select("sid", "sh", F.size("sh").alias("n_sh")).localCheckpoint()
-    hashed = sh.select(
-        "sid", hash_shingles(F.col("sh")).alias("hx")
-    )
-    # row-local numpy signature stage (guide §4.2) — same values as the
-    # old explode + 128-min aggregation (shared perm_params), no
-    # explode and no aggregation shuffle
     sig = minhash_signature_map(
-        hashed, n_perms, seed, id_col="sid"
-    ).localCheckpoint()
+        sh.select("sid", hash_shingles(F.col("sh")).alias("hx")),
+        n_perms, seed,
+    )
     # band keys only — the candidate join must not drag the shingle
     # arrays through its shuffle (they rejoin below, candidate set ≪ docs)
-    banded = sig.select(
-        "sid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
-            )
-        ).alias("band_idx", "band_hash"),
+    pruned = bucket_guard(
+        sig.select("sid", band_hashes(n_perms, bands)),
+        ["band_idx", "band_hash"], max_bucket,
     )
-    bucket = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("band_idx", "band_hash")
-    )
-    pruned = banded.join(bucket, ["band_idx", "band_hash"])
     a = pruned.alias("a")
     b = pruned.alias("b")
     cand = (

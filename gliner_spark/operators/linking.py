@@ -11,9 +11,12 @@ cosine scoring over span embeddings"). Two interchangeable paths:
    bucket, never globally.
 2. ``lsh_links`` — MinHash signatures + banded LSH blocking, then exact
    Jaccard verification on candidates only. The 100 TB path: candidate
-   generation is a single equi-join on (band_idx, band_hash); everything
-   stays JVM-side (``xxhash64``/``transform``/``array_min`` — zero
-   Python), so whole-stage codegen covers the hot path end-to-end.
+   generation is a single equi-join on (label, band_idx, band_hash)
+   whose two sides share one Exchange. Shingling, hashing and banding
+   are codegen'd Catalyst expressions; the permutation mins run in
+   ``minhash_signature_map``, the one MinHash kernel (a vectorized
+   Arrow stage shared with ``dedup.minhash_dups`` and the incremental
+   admission store).
 
 Skew: surfaces are distinct strings, so the shingle join's hot keys are
 common shingles (e.g. "the"). ``max_bucket`` drops shingle buckets larger
@@ -27,6 +30,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # deterministic MinHash permutation modulus: Mersenne prime 2^31-1, small
 # enough that (a*x + b) stays under 2^62 — Spark 4 runs ANSI mode, where
@@ -167,107 +171,64 @@ def perm_params(n_perms: int, seed: int = 7):
     ]
 
 
-def minhash_signature_agg(hashed_exploded: DataFrame, id_cols, n_perms: int,
-                          seed: int = 7):
-    """Signature via explode + map-side-combined min aggregation —
-    ~2× faster than nested array transforms at 128 perms (the partial
-    agg computes the mins before the shuffle; only id→128 mins move).
-    Input: rows (id…, h); output: (id…, sig array<long>)."""
-    perms = perm_params(n_perms, seed)
-    mins = [
-        F.min(
-            F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE))
-        ).alias(f"_m{i}")
-        for i, (a, b) in enumerate(perms)
-    ]
-    agg = hashed_exploded.groupBy(*id_cols).agg(*mins)
-    return agg.select(
-        *id_cols, F.array(*[F.col(f"_m{i}") for i in range(n_perms)]).alias("sig")
-    )
+def minhash_signature_map(hashed: DataFrame, n_perms: int,
+                          seed: int = 7) -> DataFrame:
+    """``hashed`` with its ``hx array<long>`` of pre-hashed shingles
+    (``hash_shingles``) replaced by ``sig array<long>``, the n_perms
+    MinHash values; every other column passes through. The one MinHash
+    signature kernel (guide §4.2): one row-local Arrow stage computes
+    every permutation of a batch with an (N × n_perms) int64
+    broadcast-multiply + ``minimum.reduceat`` — no explode, no shuffle.
 
-
-def minhash_signature_map(hashed: DataFrame, n_perms: int, seed: int = 7,
-                          id_col: str = "sid") -> DataFrame:
-    """(id, sig array<long>) from rows ``(id, hx array<long>)`` of
-    pre-hashed shingles (``hash_shingles``) — the row-local numpy form
-    of ``minhash_signature_agg`` (guide §4.2): one Arrow stage computes
-    every permutation of a whole batch with one (N × n_perms) int64
-    broadcast-multiply + ``minimum.reduceat``, replacing the explode +
-    n_perms-min aggregation (measured ~4× on the 50k-doc signature
-    pass; zero shuffle instead of one).
-
-    Value-identical to the agg form by construction: shared
-    ``perm_params``; h ∈ [0, M) and a, b < M = 2³¹−1 keep
+    Permutation i: h_i(x) = (a_i·x + b_i) mod M31, (a_i, b_i) from
+    ``perm_params``. h ∈ [0, M) and a, b < M = 2³¹−1 keep
     a·h + b < 2⁶² + 2³¹ inside int64, and numpy ``%`` on non-negatives
-    equals Spark ``pmod`` (pinned in tests). Rows with NULL or empty
-    hash arrays are dropped — exactly what ``explode`` did in the agg
-    form. The flat workspace is chunked (doc-aligned) so peak memory is
-    ~CHUNK × n_perms × 8 B regardless of batch size."""
+    equals Spark ``pmod`` (pinned in tests against a Python reference).
+    Rows with NULL or empty hash arrays are dropped.
+
+    Workspace: the flat hashes are cut into doc-aligned chunks of about
+    CHUNK (a longer doc is a chunk of its own), so each
+    (CHUNK × n_perms) int64 temporary is 1 MB at 128 permutations and
+    stays in cache. The earlier 65,536-hash chunks made 64 MB
+    temporaries: on one 2,500-doc batch (132k hashes) at 128
+    permutations the kernel took 256–280 ms against 114–117 ms now,
+    bit-identical (median of 7, one core of a 4-vCPU VM), and the
+    Python workers' peak RSS falls with it."""
     import pandas as pd
 
     perms = perm_params(n_perms, seed)
     pa = np.array([p[0] for p in perms], dtype=np.int64)
     pb = np.array([p[1] for p in perms], dtype=np.int64)
-    # flat hashes per workspace chunk: bounds the (CHUNK × n_perms)
-    # int64 buffer at ~64 MB for 128 perms PER TASK — sized for
-    # cores-per-executor concurrent tasks inside a few-GB Python
-    # overhead budget (guide §5), not for this sandbox's headroom
-    CHUNK = 65_536
+    CHUNK = 1_024
 
     def run(batches):
         for pdf in batches:
-            keep = [
-                (i, np.asarray(x, dtype=np.int64))
-                for i, x in enumerate(pdf["hx"])
-                if x is not None and len(x)
-            ]
-            if not keep:
-                yield pd.DataFrame({id_col: pdf[id_col][:0], "sig": []})
-                continue
-            ids = pdf[id_col].iloc[[i for i, _ in keep]]
-            arrs = [x for _, x in keep]
-            lens = np.fromiter((len(x) for x in arrs), dtype=np.int64,
-                               count=len(arrs))
+            hx = pdf.pop("hx")
+            keep = [i for i, x in enumerate(hx) if x is not None and len(x)]
+            out = pdf.iloc[keep].reset_index(drop=True)
+            arrs = [np.asarray(hx.iat[i], dtype=np.int64) for i in keep]
+            lens = np.fromiter(map(len, arrs), np.int64, len(arrs))
+            ends = np.cumsum(lens)
+            starts = ends - lens
             sig = np.empty((len(arrs), n_perms), dtype=np.int64)
             i = 0
             while i < len(arrs):
-                j, tot = i, 0
-                while j < len(arrs) and (j == i or tot + lens[j] <= CHUNK):
-                    tot += lens[j]
-                    j += 1
-                flat = np.concatenate(arrs[i:j])
-                vals = (flat[:, None] * pa[None, :] + pb[None, :]) % MERSENNE
-                starts = np.zeros(j - i, dtype=np.int64)
-                np.cumsum(lens[i:j][:-1], out=starts[1:])
-                sig[i:j] = np.minimum.reduceat(vals, starts, axis=0)
+                j = max(i + 1, int(np.searchsorted(
+                    ends, starts[i] + CHUNK, "right")))
+                vals = np.multiply.outer(np.concatenate(arrs[i:j]), pa)
+                vals += pb
+                vals %= MERSENNE
+                sig[i:j] = np.minimum.reduceat(
+                    vals, starts[i:j] - starts[i], axis=0)
                 i = j
-            yield pd.DataFrame({id_col: ids, "sig": list(sig)})
+            out["sig"] = pd.Series(list(sig), dtype=object)
+            yield out
 
-    return hashed.mapInPandas(run, f"{id_col} {hashed.schema[id_col].dataType.simpleString()}, sig array<long>")
-
-
-def minhash_signature(hashed_col, n_perms: int, seed: int = 7):
-    """Array of n_perms MinHash values over pre-hashed shingle ints
-    (``hash_shingles``) — pure SQL expressions, no Python.
-
-    Permutation i: h_i(x) = (a_i * x + b_i) mod M31, (a_i, b_i) derived
-    deterministically from the seed. Same values as
-    ``minhash_signature_agg`` (shared ``perm_params``); this expression
-    form suits small inputs (no shuffle), the agg form big ones.
-    """
-
-    def perm(a: int, b: int):
-        # factory (not default-arg lambda): F.transform inspects arity
-        def h(x):
-            return F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE))
-
-        return h
-
-    mins = [
-        F.array_min(F.transform(hashed_col, perm(a, b)))
-        for a, b in perm_params(n_perms, seed)
-    ]
-    return F.array(*mins)
+    schema = T.StructType(
+        [f for f in hashed.schema.fields if f.name != "hx"]
+        + [T.StructField("sig", T.ArrayType(T.LongType()))]
+    )
+    return hashed.mapInPandas(run, schema)
 
 
 def _banded_signatures(
@@ -277,31 +238,43 @@ def _banded_signatures(
     signature table ``lsh_links`` joins on — shared with
     ``lsh_dropped_buckets`` so the recall audit sees the exact same
     band keys."""
-    assert n_perms % bands == 0
-    rows = n_perms // bands
     sh = surfaces.withColumn("sh", char_shingles(F.col("surface"), k)).select(
-        "sid", "label", "surface", "sh", F.size("sh").alias("n_sh")
+        "sid", "label", "sh", F.size("sh").alias("n_sh"),
+        hash_shingles(F.col("sh")).alias("hx"),
     )
-    # materialized ONCE (guide §2.4): the signature table is consumed by
-    # the bucket-guard aggregation and the pruned join side in lsh_links
-    # (and once in lsh_dropped_buckets) — each reference otherwise
-    # re-runs the surfaces aggregation over the full mentions table plus
-    # the shingle + 64-permutation MinHash expressions. The table is
-    # surface-universe-sized (vocabulary-bounded).
-    sig = sh.withColumn("hx", hash_shingles(F.col("sh"))).withColumn(
-        "sig", minhash_signature(F.col("hx"), n_perms, seed)
-    ).drop("hx").localCheckpoint()
-    return sig.select(
-        "sid",
-        "label",
-        "n_sh",
-        "sh",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
-            )
-        ).alias("band_idx", "band_hash"),
+    # not pinned: lsh_links reads the signatures once, through the
+    # bucket guard's Exchange that both band-join sides reuse
+    sig = minhash_signature_map(sh, n_perms, seed)
+    return sig.select("sid", "label", "n_sh", "sh",
+                      band_hashes(n_perms, bands))
+
+
+def band_hashes(n_perms: int, bands: int):
+    """``posexplode`` of the ``sig`` column into (band_idx, band_hash):
+    band i is the Murmur3 ``hash`` of signature slice
+    [i·rows, (i+1)·rows), rows = n_perms / bands."""
+    rows = n_perms // bands
+    assert bands * rows == n_perms
+    return F.posexplode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
+        )
+    ).alias("band_idx", "band_hash")
+
+
+def bucket_guard(banded: DataFrame, keys, max_bucket: int) -> DataFrame:
+    """Rows of ``banded`` whose band bucket (the ``keys`` columns) holds
+    2..``max_bucket`` rows: a singleton pairs with nothing, and a
+    mega-bucket carries no signal and would blow up quadratically (skew
+    guard). The bucket size is a window count over the same hash
+    partitioning the band self-join needs, so both join sides read one
+    Exchange (a ReusedExchange) — no groupBy + join-back."""
+    bn = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        banded.withColumn("_bn", bn)
+        .where((F.col("_bn") > 1) & (F.col("_bn") <= max_bucket))
+        .drop("_bn")
     )
 
 
@@ -348,14 +321,8 @@ def lsh_links(
     ``exact_jaccard_links`` — recall measured in tests/bench.
     """
     banded = _banded_signatures(surfaces, k, n_perms, bands, seed)
-    # bound pathological band buckets (skew guard)
-    bucket = (
-        banded.groupBy("label", "band_idx", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .where((F.col("bn") > 1) & (F.col("bn") <= max_bucket))
-        .select("label", "band_idx", "band_hash")
-    )
-    pruned = banded.join(bucket, ["label", "band_idx", "band_hash"])
+    pruned = bucket_guard(banded, ["label", "band_idx", "band_hash"],
+                          max_bucket)
     a = pruned.alias("a")
     b = pruned.alias("b")
     cand = (

@@ -8,12 +8,12 @@ as a proximity self-join over the long-format mentions table:
   subj ⋈ obj on doc_id where subj.label/obj.label match a rule and
   0 < obj.m_start − subj.m_start ≤ window_bytes
 
-This is a plain Catalyst equi-join on ``doc_id`` with a range residual —
-fully declarative, so AQE handles skew (one hot page with thousands of
-mentions) and the rule table is broadcast. Wall-clock at scale is
-dominated by the single shuffle of mentions by doc_id; callers running
-several mention-consuming stages should ``repartition(doc_id)`` once
-upstream and reuse (see plans/kg.py).
+This is a plain Catalyst equi-join on ``(doc_id, proximity bucket)``
+with a range residual — fully declarative, so AQE handles skew (one hot
+page with thousands of mentions) and the rule table is broadcast.
+Wall-clock at scale is dominated by the shuffle of mentions into that
+join. The key includes the bucket, so an upstream ``repartition(doc_id)``
+is not reused: Spark shuffles again, and callers should not add one.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.canonicalize import canonical_entities, nodes_table
 from ..operators.checkpoint import checkpoint_write, with_part_key
-from ..operators.linking import entity_surfaces, lsh_links
+from ..operators.linking import band_hashes, entity_surfaces, lsh_links
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
 from .kg import KgResult
@@ -128,8 +128,7 @@ def merge_kg_batch(
     mentions = spark.read.parquet(f"{checkpoint_root}/mentions")
 
     triples = extract_relations(
-        mentions.repartition("doc_id"),
-        window_bytes=cfg.relation_window * 4,
+        mentions, window_bytes=cfg.relation_window * 4
     )
 
     # global closure over the merged (vocabulary-bounded) surface set:
@@ -195,25 +194,11 @@ def batch_minhash_signatures(
     # row-local form (guide §4.2): shingle-hash arrays stay JVM-side
     # (xxhash64 + pmod, codegen), the 128-permutation min runs as ONE
     # vectorized Arrow stage — no explode, no aggregation shuffle.
-    # Value-identical to the old explode + minhash_signature_agg plan
-    # (shared perm_params; equality pinned in tests).
     hashed = ensure_parallelism(docs).select(
         F.col(id_col).cast("long").alias("doc_id"),
         hash_shingles(word_shingles(F.col(text_col), k)).alias("hx"),
     )
-    return minhash_signature_map(hashed, n_perms, seed, id_col="doc_id")
-
-
-def _band_keys(sig_df: DataFrame, bands: int, rows: int) -> DataFrame:
-    return sig_df.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(F.slice(F.col("sig"), i * rows + 1, rows)),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
+    return minhash_signature_map(hashed, n_perms, seed)
 
 
 def dedup_admit_batch(
@@ -271,8 +256,7 @@ def dedup_admit_batch(
     from ..operators.canonicalize import connected_components_auto
 
     spark = new_docs.sparkSession
-    rows = n_perms // bands
-    assert bands * rows == n_perms
+    assert n_perms % bands == 0
 
     # referenced by band join, both verify sides and the store append —
     # materialized once. A caller-provided ``sig`` slice is re-pinned
@@ -292,8 +276,8 @@ def dedup_admit_batch(
             [], "doc_id long, sig array<bigint>"
         )
 
-    bn = _band_keys(sig_new, bands, rows)
-    bo = _band_keys(sig_old, bands, rows)
+    bn = sig_new.select("doc_id", band_hashes(n_perms, bands))
+    bo = sig_old.select("doc_id", band_hashes(n_perms, bands))
 
     jhat = F.round(
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),

@@ -4,17 +4,19 @@ Composition of every stage (BASELINE.json:north_star), structured for
 the 100 TB plan shape:
 
   pages ──mapInPandas(NER)──► mentions          [no shuffle]
-        ──repartition(doc_id) once──►           [THE mentions shuffle]
-        ├─ self-join window ──► triples         [reuses doc_id partitioning]
+        ├─ self-join on (doc_id, _bkt) ──► triples
+        │                                       [THE mentions shuffle]
         └─ groupBy surface ──► surfaces         [small output]
                ├─ LSH join ──► links            [tiny vs input]
                └─ CC iterations ──► entities
   triples × entity map (broadcast) ──► edges    [broadcast join: the
                                                  entity map is ≪ triples]
 
-Only one big shuffle (mentions by doc_id) touches data proportional to
-the input; everything after ``entity_surfaces`` operates on the distinct-
-surface universe, which is bounded by vocabulary, not corpus size.
+Only the relation self-join shuffles data proportional to the input; it
+keys on (doc_id, proximity bucket), so a ``repartition(doc_id)`` in front
+of it would not be reused and only add a shuffle. Everything after
+``entity_surfaces`` operates on the distinct-surface universe, which is
+bounded by vocabulary, not corpus size.
 Checkpointing wraps each materialized stage (mentions, triples, nodes,
 edges) with per-partition manifests for resume.
 """
@@ -67,11 +69,7 @@ def build_kg(
         # re-runs the scoring mapInPandas — persist once instead
         mentions = mentions.persist()
 
-    # one explicit repartition reused by the relation self-join (both
-    # sides co-partitioned on doc_id → single shuffle, local join)
-    mentions_by_doc = mentions.repartition("doc_id")
-
-    triples = extract_relations(mentions_by_doc, window_bytes=cfg.relation_window * 4)
+    triples = extract_relations(mentions, window_bytes=cfg.relation_window * 4)
     if checkpoint_root:
         triples = checkpoint_write(
             with_part_key(triples, "doc_id"), checkpoint_root, "triples"

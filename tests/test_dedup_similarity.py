@@ -2,6 +2,8 @@
 baselines on the driver's sf0.001 testdata, and determinism goldens."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gliner_spark.operators.dedup import (
@@ -393,6 +395,46 @@ def test_embedding_dups_lsh_exact_recall_on_gate_corpus(spark):
     lsh = {(r.src, r.dst, r.sim)
            for r in embedding_dup_pairs_lsh(emb).collect()}
     assert exact and lsh == exact
+
+
+def _word_shingles_ref(text, k):
+    """Python twin of word_shingles: k-token windows of the " "-split
+    text, first occurrences only; under k tokens, the whole text."""
+    w = text.split(" ")
+    if len(w) < k:
+        return [text]
+    return list(dict.fromkeys(
+        " ".join(w[i:i + k]) for i in range(len(w) - k + 1)
+    ))
+
+
+_SHINGLE_TOKENS = st.sampled_from(
+    ["", "a", "b", "ab", "é", "漢字", "x\ty", "p\nq", "\U0001F600"]
+)
+_SHINGLE_TEXTS = st.one_of(
+    st.lists(_SHINGLE_TOKENS, max_size=9).map(" ".join),
+    st.text(alphabet=" ab\t\né漢\U0001F600", max_size=14),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(texts=st.lists(_SHINGLE_TEXTS, min_size=1, max_size=20))
+def test_word_shingles_match_python_reference(spark, texts):
+    """The codegen'd regex shingler equals the split/join reference for
+    k = 1..5 over empty tokens, leading/trailing/double spaces, tabs,
+    newlines and non-ASCII; NULL text yields [''] (pinned)."""
+    from gliner_spark.operators.dedup import word_shingles
+
+    ks = range(1, 6)
+    df = spark.createDataFrame([(t,) for t in texts] + [(None,)],
+                               "text string")
+    rows = df.select(
+        "text", *[word_shingles(F.col("text"), k).alias(f"k{k}") for k in ks]
+    ).collect()
+    for r in rows:
+        for k in ks:
+            want = [""] if r.text is None else _word_shingles_ref(r.text, k)
+            assert list(r[f"k{k}"]) == want, (r.text, k)
 
 
 def test_ngram_hash_prefilter_zero_collisions_at_gate_scale(spark):

@@ -287,31 +287,151 @@ def test_lsh_cosine_links_on_mentions(spark):
     ) in pairs
 
 
-def test_minhash_signature_map_equals_agg(spark):
-    """The row-local numpy signature stage must be value-identical to
-    the explode + n_perms-min aggregation it replaced (shared
-    perm_params; int64 no-overflow + numpy %% == pmod argument in the
-    docstring) — pinned over the gate corpus with both id types."""
+def _minhash_reference(hx, n_perms, seed):
+    """Pure-Python MinHash over pre-hashed shingles: Python ints never
+    overflow, so this checks the kernel's int64 arithmetic too."""
+    from gliner_spark.operators.linking import MERSENNE, perm_params
+
+    return [min((a * h + b) % MERSENNE for h in hx)
+            for a, b in perm_params(n_perms, seed)]
+
+
+def test_minhash_signature_map_equals_reference(spark):
+    """The one signature kernel equals a Python reference over the gate
+    corpus, passes every non-``hx`` column through, and drops rows
+    whose hash array is NULL or empty."""
     from pyspark.sql import functions as F
 
     from gliner_spark.operators.dedup import word_shingles
     from gliner_spark.operators.linking import (
         hash_shingles,
-        minhash_signature_agg,
         minhash_signature_map,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     hx = docs.select(
         F.col("doc_id").cast("long").alias("sid"),
+        F.col("lang"),
         hash_shingles(word_shingles(F.col("text"), 3)).alias("hx"),
-    )
-    got = {r.sid: list(r.sig)
-           for r in minhash_signature_map(hx, 128, 11).collect()}
-    want = {
-        r.sid: list(r.sig)
-        for r in minhash_signature_agg(
-            hx.select("sid", F.explode("hx").alias("h")), ["sid"], 128, 11
-        ).collect()
-    }
+    ).unionByName(spark.createDataFrame(
+        [(-1, "x", None), (-2, "x", [])],
+        "sid long, lang string, hx array<bigint>",
+    ))
+    out = minhash_signature_map(hx, 128, 11)
+    assert out.columns == ["sid", "lang", "sig"]
+    got = {r.sid: (r.lang, list(r.sig)) for r in out.collect()}
+    want = {r.sid: (r.lang, _minhash_reference(r.hx, 128, 11))
+            for r in hx.collect() if r.hx}
     assert got == want and len(got) == docs.count()
+
+
+def _char_shingles_ref(s, k=3):
+    return {s[i:i + k] for i in range(max(len(s) - k + 1, 1))}
+
+
+def _guarded_pairs_ref(banded, keys, max_bucket):
+    """Python twin of the band-bucket guard + self-join: buckets with
+    2..max_bucket members, their (a < b) pairs, deduplicated; also the
+    number of buckets over max_bucket."""
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for r in banded:
+        buckets[tuple(r[c] for c in keys)].append(r["sid"])
+    pairs = {
+        (a, b)
+        for ids in buckets.values() if 1 < len(ids) <= max_bucket
+        for a in ids for b in ids if a < b
+    }
+    return pairs, sum(len(ids) > max_bucket for ids in buckets.values())
+
+
+def test_lsh_links_bucket_guard_matches_reference(spark):
+    """Surfaces built from repeated char patterns share one shingle set,
+    so each group shares every band bucket: groups of 1 (singleton
+    buckets), 2 and 3 (kept at max_bucket=3) and 5 (dropped). lsh_links
+    must keep exactly the reference's guarded pairs, and
+    lsh_dropped_buckets must count the buckets it drops."""
+    from gliner_spark.operators.linking import (
+        _banded_signatures,
+        lsh_dropped_buckets,
+    )
+
+    rows = [("city", "kyiv", 1)]
+    for pat, n in (("ab", 2), ("xyz", 3), ("mno", 5)):
+        rows += [("city", pat * 2 + pat[:j], 1) for j in range(n)]
+    rows += [("person", "ab" * 2, 1)]  # same shingles, other label
+    surfaces = _surfaces(spark, rows)
+    args = dict(k=3, n_perms=64, bands=32, seed=7)
+
+    banded = [r.asDict() for r in _banded_signatures(surfaces, **args)
+              .collect()]
+    pairs, n_dropped = _guarded_pairs_ref(
+        banded, ["label", "band_idx", "band_hash"], 3)
+    sh = {f"{lab}:{s}": _char_shingles_ref(s) for lab, s, _ in rows}
+    sims = {
+        (a, b): round(len(sh[a] & sh[b]) / len(sh[a] | sh[b]), 6)
+        for a, b in pairs
+    }
+    want = {p: v for p, v in sims.items() if v >= 0.30}
+    got = {(r.src, r.dst): r.sim for r in
+           lsh_links(surfaces, max_bucket=3, **args).collect()}
+    assert got == want
+    assert ("city:abab", "city:ababa") in got
+    assert not any("mno" in a for a, _ in got)
+    assert n_dropped >= 32
+    assert lsh_dropped_buckets(surfaces, max_bucket=3, **args) == n_dropped
+
+
+def test_minhash_dups_bucket_guard_matches_reference(spark):
+    """Copies of one text share every band bucket: a singleton, groups
+    of 2 and 3 (kept at max_bucket=3) and of 5 (dropped), plus a
+    one-word-edited near-dup pair that shares only some bands.
+    minhash_dups must return exactly the reference's guarded,
+    exact-verified pairs."""
+    import random
+
+    from gliner_spark.operators.dedup import minhash_dups, word_shingles
+    from gliner_spark.operators.linking import (
+        band_hashes,
+        hash_shingles,
+        minhash_signature_map,
+    )
+
+    rng = random.Random(5)
+
+    def words():
+        return [f"w{rng.randrange(10**6)}" for _ in range(40)]
+
+    texts = [" ".join(words())]
+    for n in (2, 3, 5):
+        texts += [" ".join(words())] * n
+    base = words()
+    texts += [" ".join(base), " ".join(base[:-1] + ["dup"])]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+
+    banded = minhash_signature_map(
+        docs.select(F.col("doc_id").alias("sid"),
+                    hash_shingles(word_shingles(F.col("text"), 3))
+                    .alias("hx")),
+        128, 11,
+    ).select("sid", band_hashes(128, 32)).collect()
+    pairs, n_dropped = _guarded_pairs_ref(
+        [r.asDict() for r in banded], ["band_idx", "band_hash"], 3)
+
+    def grams(t):
+        w = t.split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    want = {}
+    for a, b in pairs:
+        ga, gb = grams(texts[a]), grams(texts[b])
+        sim = round(len(ga & gb) / len(ga | gb), 6)
+        if sim >= 0.8:
+            want[(a, b)] = sim
+    got = {(r.src, r.dst): r.sim for r in
+           minhash_dups(docs, max_bucket=3).collect()}
+    assert got == want
+    assert (1, 2) in got and (len(texts) - 2, len(texts) - 1) in got
+    assert not any(6 <= a <= 10 for a, _ in got) and n_dropped >= 32

@@ -88,9 +88,9 @@ def main() -> int:
         {"PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]": True},
     )
 
-    # 3. relations: rule table broadcast; single doc_id shuffle reused;
-    # codegen markers only visible on the executed (final) AQE plan
-    t = extract_relations(m.repartition("doc_id"))
+    # 3. relations: rule table broadcast; codegen markers only visible
+    # on the executed (final) AQE plan
+    t = extract_relations(m)
     p = executed_plan_of(t)
     bad += not check(
         "ner_triples (broadcast rules, codegen join)",
@@ -98,14 +98,21 @@ def main() -> int:
         {"BroadcastHashJoin": True, "*(": True},
     )
 
-    # 4. linking LSH: JVM-only signature computation (no Python stage)
-    links = lsh_links(entity_surfaces(m))
-    p = executed_plan_of(links)
-    bad += not check(
-        "kg_links_lsh (JVM-side minhash)",
-        p,
-        {"ArrowEvalPython": False, "BatchEvalPython": False, "*(": True},
-    )
+    # 4. MinHash-LSH (linking and dedup): signatures in the one
+    # vectorized Arrow stage (no row-at-a-time Python), the window
+    # bucket guard's Exchange feeds both band self-join sides (reused),
+    # and the rest runs in codegen
+    from gliner_spark.operators.dedup import minhash_dups
+
+    lsh_contract = {"MapInPandas": True, "ArrowEvalPython": False,
+                    "BatchEvalPython": False, "ReusedExchange": True,
+                    "*(": True}
+    for name, df in (("kg_links_lsh", lsh_links(entity_surfaces(m))),
+                     ("dedup_minhash", minhash_dups(docs))):
+        bad += not check(
+            f"{name} (one Arrow MinHash stage, one band-join Exchange)",
+            executed_plan_of(df), lsh_contract,
+        )
 
     # 5. bpe token counting: pure Catalyst (regexp_extract_all inside
     # codegen — zero Python stage)
