@@ -181,16 +181,16 @@ def q_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_nodes_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # large-star/small-star CC (O(log n) rounds — the 10^12-node path)
-    # must produce the identical nodes table → shares the kg_nodes
-    # oracle (recursive-CTE components)
-    from gliner_spark.operators.canonicalize import connected_components_star
+    # runs the large-star/small-star rounds (the distributed CC path)
+    # whatever the graph size: its (node, component) pairs are
+    # star-shaped edges with the same components, so the nodes table is
+    # identical and shares the kg_nodes oracle (recursive-CTE components)
+    from gliner_spark.operators.canonicalize import star_components
 
     surfaces = entity_surfaces(_mentions(spark, sf_dir)).localCheckpoint()
-    links = exact_jaccard_links(surfaces)
-    return nodes_table(
-        canonical_entities(surfaces, links, cc_fn=connected_components_star)
-    )
+    star = star_components(exact_jaccard_links(surfaces)).select(
+        F.col("node").alias("src"), F.col("component").alias("dst"))
+    return nodes_table(canonical_entities(surfaces, star))
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -47,7 +47,9 @@ class PipelineConfig:
 
     # MinHash-LSH linking
     minhash_perms: int = 64
-    lsh_bands: int = 16          # 16 bands × 4 rows
+    # both KG call sites (plans/kg.py::kg_tables) link with
+    # 2 × lsh_bands = 32 bands of 2 rows over minhash_perms
+    lsh_bands: int = 16
     shingle_k: int = 3           # char shingles
     link_threshold: float = 0.60  # cosine threshold on span embeddings
     embed_dim: int = 64          # hashing-trick surrogate embedding dim
@@ -56,5 +58,6 @@ class PipelineConfig:
     salt_buckets: int = 8
     hot_key_threshold: int = 10_000  # rows per key before salting kicks in
 
-    # connected components
+    # connected components: bounds the large-star/small-star rounds
+    # (graphs past canonicalize.DRIVER_EDGES edges)
     cc_max_iters: int = 20

@@ -1,27 +1,35 @@
 """Canonicalization: connected components over link edges → entity ids.
 
 No reference counterpart; mandated by the north rule (GraphFrames is the
-suggestion there but is not installed in this sandbox, so the primary
-implementation is a native DataFrame iteration — SURVEY.md §2.3).
+suggestion there but is not installed in this sandbox, so the
+implementation is native DataFrame code — SURVEY.md §2.3).
 
-Algorithm: iterated label propagation to the component minimum ("hash-
-min"), the DataFrame formulation of the classic small-star/large-star
-map-reduce CC. Each iteration is one shuffle (groupBy node); labels
-monotonically decrease, so convergence is ≤ diameter iterations —
-surface-similarity graphs have tiny diameters (chains of near-duplicate
-strings), so the ``max_iters=20`` bound is generous. ``localCheckpoint``
-truncates lineage per iteration (without it the plan doubles each round
-and Catalyst analysis time explodes by iteration ~15).
+One operator, ``connected_components``, with one selection rule: the
+graphs this pipeline canonicalizes are vocabulary-bounded (distinct-
+surface link pairs, near-dup doc pairs), so up to ``DRIVER_EDGES`` edges
+it labels components with a driver union-find over one collected pass
+of the edge list. Above that it runs ``star_components``, the
+large-star/small-star iteration (Kiveris et al.), whose round count
+grows with log of component size, not with diameter. Self-loops are
+dropped on both paths, so the node universe does not depend on the
+graph's size.
 
 At 100 TB the edge set after linking is ≪ input size (distinct surface
-pairs over threshold), so per-iteration shuffles are cheap relative to
-the NER scan; AQE coalesces the small shuffles.
+pairs over threshold), so per-round shuffles are cheap relative to the
+NER scan; AQE coalesces the small shuffles.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# edges collected for the driver union-find: bounded, model-sized
+# driver state, the same argument as the IVF centroid collect
+# (operators/similarity.py)
+DRIVER_EDGES = 1_000_000
 
 
 def connected_components(
@@ -31,134 +39,35 @@ def connected_components(
     max_iters: int = 20,
 ) -> DataFrame:
     """edges(src, dst) undirected → (node, component) with component =
-    min node id (lexicographic for strings) in the component.
+    min node id in the component; self-loops are dropped.
 
-    Convergence is checked every round; if ``max_iters`` is exhausted
-    while labels are still changing (component diameter > max_iters) a
-    warning is emitted — silently-unconverged labels would split one
-    entity into several. Diameter-heavy graphs should use
-    ``connected_components_star`` (O(log n) rounds) instead."""
-    import warnings
-    # materialize the symmetrized edge set ONCE: every iteration joins
-    # against it, and without truncation each round re-executes the
-    # whole upstream linking DAG (shingle inverted-index join etc.) —
-    # measured as the dominant cost of kg_nodes (the star variant
-    # already does this)
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    ).localCheckpoint()
-    # seed with the neighborhood minimum (≡ running iteration 1 inside
-    # the init aggregation — saves one full join round)
-    labels = (
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("nbr_min"))
-        .select(
-            "node", F.least("node", F.col("nbr_min")).alias("component")
-        )
-    ).localCheckpoint()
-
-    for _ in range(max_iters):
-        # candidate label for each node: min over neighbors' labels
-        nbr = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", "component")
-                ).alias("component"),
-            )
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        warnings.warn(
-            f"connected_components: not converged after {max_iters} "
-            "iterations (component diameter exceeds the bound); labels "
-            "may split one component into several. Raise max_iters or "
-            "use connected_components_star (O(log n) rounds).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 20,
-    driver_threshold: int = 1_000_000,
-    size_hint: int | None = None,
-) -> DataFrame:
-    """Size-adaptive connected components.
-
-    The graphs this pipeline canonicalizes are vocabulary-bounded
-    (distinct-surface link pairs / near-dup doc pairs), usually orders
-    of magnitude smaller than the corpus. Up to ``driver_threshold``
-    edges the labeling runs as a driver-side union-find over ONE
-    collected pass of the edge list — identical output to the
-    distributed iteration with none of its per-iteration shuffle +
-    localCheckpoint + convergence-action fixed costs (measured ~2 s of
-    overhead on a 4-edge graph). Bounded driver state with an explicit
-    threshold — the same legitimacy argument as the IVF centroid
-    collect (operators/similarity.py). Above the threshold it falls
-    back to the distributed hash-min iteration; the collect is a
-    ``limit(threshold+1)`` so the probe itself never materializes an
-    oversized graph on the driver.
-
-    The (possibly expensive) upstream edge plan executes ONCE either
-    way (r4 ADVICE): the probe runs against a persisted ``edges``, so
-    the distributed fallback's own materialization (its entry
-    ``localCheckpoint`` of the symmetrized edges) reads the cache
-    instead of recomputing the pair join. Callers that already know
-    the edge count can pass ``size_hint`` to skip the probe's
-    persist+count round trip — but NOT the safety bound: the collect
-    keeps its ``limit(threshold+1)`` even when hinted, so a stale or
-    miscomputed hint degrades to the distributed path instead of
-    materializing an unbounded graph on the driver (r5 ADVICE)."""
-    if size_hint is not None:
-        if size_hint > driver_threshold:
-            return connected_components(edges, src, dst, max_iters)
-        rows = edges.select(
+    The edge set is pinned and probed with ``limit(DRIVER_EDGES + 1)``,
+    so the probe never materializes an oversized graph on the driver.
+    Up to ``DRIVER_EDGES`` edges the labeling is a driver union-find,
+    which skips the ~1.5 s per-round fixed cost of the iteration; past
+    it ``star_components`` reads the pin, so the upstream edge plan
+    runs once either way."""
+    pinned = edges.where(F.col(src) != F.col(dst)).persist()
+    try:
+        rows = pinned.select(
             F.col(src).alias("a"), F.col(dst).alias("b")
-        ).limit(driver_threshold + 1).collect()
-        if len(rows) > driver_threshold:  # hint was wrong — stay safe
-            return connected_components(edges, src, dst, max_iters)
-    else:
-        pinned = edges.persist()
-        try:
-            rows = pinned.select(
-                F.col(src).alias("a"), F.col(dst).alias("b")
-            ).limit(driver_threshold + 1).collect()
-            if len(rows) > driver_threshold:
-                # entry localCheckpoint of the fallback materializes
-                # from the cache; safe to release afterwards
-                return connected_components(pinned, src, dst, max_iters)
-        finally:
-            pinned.unpersist()
-    return _union_find_df(edges, src, rows)
+        ).limit(DRIVER_EDGES + 1).collect()
+        if len(rows) > DRIVER_EDGES:
+            # its entry localCheckpoint copies the pin; safe to release
+            return star_components(pinned, src, dst, max_iters)
+        return _union_find_df(pinned, src, rows)
+    finally:
+        pinned.unpersist()
+
+
+# the name perfbench/workloads.py imports
+connected_components_auto = connected_components
 
 
 def _union_find_df(edges: DataFrame, src: str, rows) -> DataFrame:
     """Driver path-compressed union-find over a collected edge list →
-    (node, component) DataFrame with component = min member. Shared by
-    the size-adaptive CC entry points; callers are responsible for
-    bounding ``rows`` (limit(threshold+1) probes)."""
+    (node, component) DataFrame with component = min member. The caller
+    bounds ``rows``."""
     parent: dict = {}
 
     def find(x):
@@ -184,20 +93,14 @@ def _union_find_df(edges: DataFrame, src: str, rows) -> DataFrame:
 
 def canonical_entities(
     surfaces: DataFrame, links: DataFrame, max_iters: int = 20,
-    cc_fn=None,
 ) -> DataFrame:
     """surfaces(sid, label, surface, n_mentions) × links(src, dst, sim)
     → (sid, entity_id, canonical, label, n_mentions).
 
     entity_id = min sid in the component; singleton surfaces (no link)
     are their own entity. canonical = the entity_id's surface string.
-    ``cc_fn`` selects the components algorithm (size-adaptive default:
-    driver union-find below 1M edges, distributed hash-min above;
-    ``connected_components_star`` for the O(log n)-round path).
     """
-    comp = (cc_fn or connected_components_auto)(
-        links, "src", "dst", max_iters
-    )
+    comp = connected_components(links, "src", "dst", max_iters)
     mapped = (
         surfaces.join(comp, surfaces.sid == comp.node, "left")
         .select(
@@ -274,47 +177,23 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components_star(
+def star_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iters: int = 25,
-    driver_threshold: int = 100_000,
+    max_iters: int = 20,
 ) -> DataFrame:
     """Large-star/small-star connected components (the O(log n)-round
-    map-reduce CC of Kiveris et al., re-expressed as DataFrame joins) —
-    the 10^12-node path: round count grows with log of component size,
-    not diameter, unlike the hash-min propagation in
-    ``connected_components`` (kept as the low-overhead default for the
-    small surface/dup graphs this pipeline produces).
+    map-reduce CC of Kiveris et al., re-expressed as DataFrame joins):
+    the distributed path of ``connected_components``, for graphs past
+    ``DRIVER_EDGES``. Each round costs ~10 small shuffle stages plus a
+    localCheckpoint. If ``max_iters`` rounds pass without reaching the
+    fixpoint a ``RuntimeWarning`` is emitted: unconverged labels can
+    split one component into several.
 
-    Like every CC entry point here, size-adaptive (r5 verdict #8): a
-    graph under ``driver_threshold`` edges short-circuits to the shared
-    driver union-find — each star round costs ~10 tiny shuffle stages
-    plus a localCheckpoint, a fixed ~1.5 s/round that a toy graph pays
-    3× over for 17 nodes. The iteration itself (unchanged above the
-    threshold) is the one that runs at 10^12 nodes; tests pin it
-    directly with ``driver_threshold=0``.
-
-    Returns (node, component) with component = min node id.
+    Returns (node, component) with component = min node id; self-loops
+    are dropped.
     """
-    pinned = None
-    if driver_threshold > 0:
-        pinned = edges.persist()
-        # self-loops dropped BEFORE the union-find, matching the
-        # iteration's _symmetric(u != v) filter — otherwise the output
-        # node universe would depend on which side of the threshold
-        # the graph lands (a node whose only edge is (n, n) appears as
-        # a singleton from the union-find but not from the iteration)
-        probe = pinned.where(F.col(src) != F.col(dst)).select(
-            F.col(src).alias("a"), F.col(dst).alias("b")
-        ).limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            try:
-                return _union_find_df(pinned, src, probe)
-            finally:
-                pinned.unpersist()
-        edges = pinned  # entry localCheckpoint below reads the cache
     def _sig(df: DataFrame) -> tuple:
         # one cheap aggregation job over the just-checkpointed
         # partitions: (count, order-insensitive xxhash64 content sum)
@@ -326,26 +205,31 @@ def connected_components_star(
         return r.n, r.h
 
     entry = _symmetric(edges, src, dst).localCheckpoint()  # eager
-    if pinned is not None:
-        pinned.unpersist()  # the entry checkpoint holds the data now
     e = entry
     sig = _sig(e)
     for _ in range(max_iters):
         e2 = _small_star(_large_star(e)).localCheckpoint()
         sig2 = _sig(e2)
-        # fixpoint check, cheapest-first (r5 verdict #8): the per-round
-        # probe is ONE no-shuffle aggregation — equal multisets have
-        # equal (count, hash-sum), so a signature change proves
-        # progress without any join. Only a signature MATCH runs the
-        # exact exceptAll confirmation (for equal sizes e2 ⊆ e implies
-        # e ⊆ e2, one direction suffices), i.e. the heavy join executes
-        # once per call, at the true fixpoint — not once per
-        # near-converged round. A hash-sum collision merely costs that
-        # one extra exceptAll; it cannot terminate the loop early.
+        # fixpoint check, cheapest-first: the per-round probe is ONE
+        # no-shuffle aggregation — equal multisets have equal (count,
+        # hash-sum), so a signature change proves progress without any
+        # join. Only a signature MATCH runs the exact exceptAll
+        # confirmation (for equal sizes e2 ⊆ e implies e ⊆ e2, one
+        # direction suffices), i.e. the heavy join executes once per
+        # call, at the true fixpoint. A hash-sum collision merely costs
+        # that one extra exceptAll; it cannot terminate the loop early.
         if sig2 == sig and e2.exceptAll(e).limit(1).count() == 0:
             e = e2
             break
         e, sig = e2, sig2
+    else:
+        warnings.warn(
+            f"star_components: not converged after {max_iters} rounds; "
+            "labels may split one component into several. Raise "
+            "max_iters.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     # e is now (almost-)star-shaped: node → its component min, plus the
     # roots themselves; resolve one more min per node for safety
     comp = e.groupBy("u").agg(F.min("v").alias("component"))

@@ -100,16 +100,6 @@ def word_shingles(text_col, k: int = 3):
     )
 
 
-def _doc_shingle_exploded(docs: DataFrame, id_col: str, text_col: str,
-                          k: int) -> DataFrame:
-    docs = ensure_parallelism(docs)
-    sh = docs.select(
-        F.col(id_col).cast("long").alias("sid"),
-        word_shingles(F.col(text_col), k).alias("sh"),
-    ).select("sid", F.lit("doc").alias("label"), "sh", F.size("sh").alias("n_sh"))
-    return sh.select("sid", "label", "n_sh", F.explode("sh").alias("shingle"))
-
-
 def _prefix_index(
     docs: DataFrame, k: int, threshold: float, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -455,23 +445,15 @@ def near_dup_clusters(
                                 id_col=id_col, text_col=text_col)
     )
 
-    # zero-padded node ids: CC's lexicographic min == numeric min
-    def pad(c):
-        return F.lpad(c.cast("string"), 20, "0")
+    from .canonicalize import connected_components
 
-    from .canonicalize import connected_components_auto
-
-    comp = connected_components_auto(
-        pairs.select(pad(F.col("src")).alias("src"),
-                     pad(F.col("dst")).alias("dst"))
-    )
+    comp = connected_components(pairs.select("src", "dst"))
     ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
     clustered = (
-        ids.join(comp, pad(F.col("doc_id")) == comp.node, "left")
+        ids.join(comp, F.col("doc_id") == comp.node, "left")
         .select(
             "doc_id",
-            F.coalesce(F.col("component").cast("long"), F.col("doc_id"))
-            .alias("cluster_id"),
+            F.coalesce("component", "doc_id").alias("cluster_id"),
         )
     )
     sizes = clustered.groupBy("cluster_id").agg(
@@ -481,8 +463,8 @@ def near_dup_clusters(
         "doc_id",
         "cluster_id",
         "cluster_size",
-        # hash-min CC labels every member with the component minimum,
-        # so the canonical keeper IS the cluster id
+        # CC labels every member with the component minimum, so the
+        # canonical keeper IS the cluster id
         (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
     )
 

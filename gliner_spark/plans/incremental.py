@@ -27,12 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.canonicalize import canonical_entities, nodes_table
 from ..operators.checkpoint import checkpoint_write, with_part_key
-from ..operators.linking import band_hashes, entity_surfaces, lsh_links
+from ..operators.linking import band_hashes, entity_surfaces
 from ..operators.ner import extract_mentions
 from ..operators.relations import extract_relations
-from .kg import KgResult
+from .kg import KgResult, kg_tables
 
 
 def _batch_fingerprint(
@@ -66,7 +65,6 @@ def merge_kg_batch(
     cfg: PipelineConfig = PipelineConfig(),
     id_col: str = "url",
     text_col: str = "text",
-    link_fn=None,
     batch_id: str | int | None = None,
 ) -> KgResult:
     """Score ONLY ``new_pages``, append their mentions/triples under
@@ -85,10 +83,9 @@ def merge_kg_batch(
     make a replay of the same batch a no-op while distinct batches
     never collide.
 
-    ``link_fn`` picks the linking path; the default is the SAME
-    lsh_links configuration plans/kg.build_kg uses, so incremental
-    merging is bit-equivalent to a from-scratch build (pytest-pinned);
-    pass ``exact_jaccard_links`` for the oracle-exact path."""
+    nodes/edges come from ``plans/kg.py::kg_tables``, the same tail
+    ``build_kg`` runs, so incremental merging is bit-equivalent to a
+    from-scratch build (pytest-pinned)."""
     spark = new_pages.sparkSession
 
     fp = (
@@ -133,45 +130,7 @@ def merge_kg_batch(
 
     # global closure over the merged (vocabulary-bounded) surface set:
     # new surfaces may bridge previously separate components
-    surfaces = entity_surfaces(mentions)
-    if link_fn is None:
-        links = lsh_links(
-            surfaces, k=cfg.shingle_k, n_perms=cfg.minhash_perms,
-            bands=cfg.lsh_bands * 2,
-        )
-    else:
-        links = link_fn(surfaces)
-    entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
-    nodes = nodes_table(entities)
-
-    ent_map = F.broadcast(
-        entities.select(
-            F.col("label").alias("e_label"),
-            F.col("surface").alias("e_surface"),
-            "entity_id",
-        )
-    )
-    t = triples
-    edges = (
-        t.join(
-            ent_map,
-            (F.lower(t.subj) == F.col("e_surface"))
-            & (t.subj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "src_entity")
-        .drop("e_label", "e_surface")
-        .join(
-            ent_map,
-            (F.lower(t.obj) == F.col("e_surface"))
-            & (t.obj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "dst_entity")
-        .groupBy("src_entity", "dst_entity", "pred")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.round(F.sum("prob"), 4).alias("weight"),
-        )
-    )
+    nodes, edges = kg_tables(entity_surfaces(mentions), triples, cfg)
     return KgResult(mentions, triples, nodes, edges)
 
 
@@ -245,7 +204,7 @@ def dedup_admit_batch(
        detection, Ĵ = 1, is unaffected);
     4. keep = not Ĵ-matched to any admitted doc, and the minimum
        doc_id of its new-vs-new duplicate component (transitive, via
-       the size-adaptive connected components);
+       connected components);
     5. append the KEPT docs' signatures to the store.
 
     Returns (doc_id, dup_of, keep) for the new batch: ``dup_of`` is
@@ -253,7 +212,7 @@ def dedup_admit_batch(
     NULL for keepers. The store write is plain parquet append — wrap
     calls in the checkpoint manifest (``checkpoint_write``) when
     retries must be idempotent, exactly like merge_batch above."""
-    from ..operators.canonicalize import connected_components_auto
+    from ..operators.canonicalize import connected_components
 
     spark = new_docs.sparkSession
     assert n_perms % bands == 0
@@ -340,14 +299,7 @@ def dedup_admit_batch(
         .dropDuplicates(["src", "dst"])
     )
     vs_new = verify(nn_cand, sig_new, sig_new)
-    # size_hint=0: the new-vs-new duplicate pair set is output-sized
-    # (≪ batch), so hint the driver union-find path — this skips the
-    # probe's persist/unpersist round trip (one less barrier per
-    # admission). The hint is safe by construction: the collect keeps
-    # its limit(threshold+1) guard, and the distributed fallback only
-    # re-executes a pipeline that reads from this batch's checkpoints.
-    comp = connected_components_auto(vs_new, "src", "dst",
-                                     size_hint=0).select(
+    comp = connected_components(vs_new, "src", "dst").select(
         F.col("node").alias("doc_id"), F.col("component").alias("new_group")
     )
 

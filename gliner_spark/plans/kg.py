@@ -8,7 +8,7 @@ the 100 TB plan shape:
         │                                       [THE mentions shuffle]
         └─ groupBy surface ──► surfaces         [small output]
                ├─ LSH join ──► links            [tiny vs input]
-               └─ CC iterations ──► entities
+               └─ connected components ──► entities
   triples × entity map (broadcast) ──► edges    [broadcast join: the
                                                  entity map is ≪ triples]
 
@@ -43,6 +43,54 @@ class KgResult:
     triples: DataFrame
     nodes: DataFrame
     edges: DataFrame
+
+
+def kg_tables(
+    surfaces: DataFrame, triples: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """surfaces × triples → (nodes, edges): the KG tail shared by
+    ``build_kg`` and the incremental merge (plans/incremental.py), so a
+    folded KG equals a from-scratch build by construction.
+
+    Surfaces are linked with MinHash-LSH, canonicalized by connected
+    components, and the entity map (distinct surfaces, ≪ triples) is
+    broadcast onto both triple endpoints."""
+    links = lsh_links(
+        surfaces,
+        k=cfg.shingle_k,
+        n_perms=cfg.minhash_perms,
+        bands=cfg.lsh_bands * 2,
+    )
+    entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
+    ent_map = F.broadcast(
+        entities.select(
+            F.col("label").alias("e_label"),
+            F.col("surface").alias("e_surface"),
+            "entity_id",
+        )
+    )
+    t = triples
+    edges = (
+        t.join(
+            ent_map,
+            (F.lower(t.subj) == F.col("e_surface"))
+            & (t.subj_label == F.col("e_label")),
+        )
+        .withColumnRenamed("entity_id", "src_entity")
+        .drop("e_label", "e_surface")
+        .join(
+            ent_map,
+            (F.lower(t.obj) == F.col("e_surface"))
+            & (t.obj_label == F.col("e_label")),
+        )
+        .withColumnRenamed("entity_id", "dst_entity")
+        .groupBy("src_entity", "dst_entity", "pred")
+        .agg(
+            F.count(F.lit(1)).alias("support"),
+            F.round(F.sum("prob"), 4).alias("weight"),
+        )
+    )
+    return nodes_table(entities), edges
 
 
 def build_kg(
@@ -96,44 +144,7 @@ def build_kg(
         if probe.take(1):
             salt = cfg.salt_buckets
     surfaces = entity_surfaces(mentions, salt_buckets=salt)
-    links = lsh_links(
-        surfaces,
-        k=cfg.shingle_k,
-        n_perms=cfg.minhash_perms,
-        bands=cfg.lsh_bands * 2,
-    )
-    entities = canonical_entities(surfaces, links, cfg.cc_max_iters)
-    nodes = nodes_table(entities)
-
-    # entity map is distinct surfaces → broadcast against triples
-    ent_map = F.broadcast(
-        entities.select(
-            F.col("label").alias("e_label"),
-            F.col("surface").alias("e_surface"),
-            "entity_id",
-        )
-    )
-    t = triples
-    edges = (
-        t.join(
-            ent_map,
-            (F.lower(t.subj) == F.col("e_surface"))
-            & (t.subj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "src_entity")
-        .drop("e_label", "e_surface")
-        .join(
-            ent_map,
-            (F.lower(t.obj) == F.col("e_surface"))
-            & (t.obj_label == F.col("e_label")),
-        )
-        .withColumnRenamed("entity_id", "dst_entity")
-        .groupBy("src_entity", "dst_entity", "pred")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.round(F.sum("prob"), 4).alias("weight"),
-        )
-    )
+    nodes, edges = kg_tables(surfaces, triples, cfg)
 
     if checkpoint_root:
         nodes = checkpoint_write(

@@ -37,7 +37,6 @@ def stream_kg_updates(
     checkpoint_root: str,
     out_dir: str,
     cfg: PipelineConfig = PipelineConfig(),
-    link_fn=None,
 ):
     """Return a ready-to-``start()`` writeStream that folds each
     micro-batch of pages into the KG under ``checkpoint_root`` and
@@ -49,7 +48,7 @@ def stream_kg_updates(
         # the epoch id is stable across replays of the same micro-batch,
         # so it scopes the manifest partitions (replay = no-op) for free
         kg = merge_kg_batch(
-            batch_df, labels, checkpoint_root, cfg=cfg, link_fn=link_fn,
+            batch_df, labels, checkpoint_root, cfg=cfg,
             batch_id=f"epoch{batch_id}",
         )
         # versioned-dir + pointer-swap publish: a reader resolving

@@ -117,36 +117,44 @@ def test_connected_components_chain(spark):
     assert comp["p"] == comp["q"] == comp["r"] == comp["s"] == "p"
 
 
-def test_cc_auto_matches_distributed_both_sides_of_threshold(spark):
-    """connected_components_auto must equal the distributed hash-min
-    labeling exactly — on the driver union-find path AND past the
-    threshold where it falls back to the iteration."""
-    from gliner_spark.operators.canonicalize import (
-        connected_components,
-        connected_components_auto,
-    )
+def _bfs_components(edges):
+    """Reference labeling: BFS over the undirected graph, self-loops
+    dropped, component = min node."""
+    adj = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    comp = {}
+    for start in adj:
+        if start not in comp:
+            seen, queue = {start}, [start]
+            for n in queue:
+                queue += adj[n] - seen
+                seen |= adj[n]
+            comp.update(dict.fromkeys(seen, min(seen)))
+    return comp
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r")],
-        "src string, dst string",
-    )
-    dist = {(r.node, r.component)
+
+def test_connected_components_matches_bfs_both_sides_of_threshold(
+        spark, monkeypatch):
+    """The driver union-find path and, past DRIVER_EDGES, the star
+    rounds both equal the BFS reference — self-loops included: the node
+    universe must not depend on which side of the threshold a graph
+    lands (a node whose only edge is (n, n) is no node)."""
+    from gliner_spark.operators import canonicalize
+
+    pairs = [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"),
+             ("c", "c"), ("solo", "solo")]
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    ref = _bfs_components(pairs)
+    driver = {r.node: r.component
+              for r in connected_components(edges).collect()}
+    assert driver == ref and "solo" not in driver
+    monkeypatch.setattr(canonicalize, "DRIVER_EDGES", 2)
+    star = {r.node: r.component
             for r in connected_components(edges).collect()}
-    auto = {(r.node, r.component)
-            for r in connected_components_auto(edges).collect()}
-    assert auto == dist
-    # force the fallback: threshold below the edge count
-    fb = {(r.node, r.component)
-          for r in connected_components_auto(
-              edges, driver_threshold=2).collect()}
-    assert fb == dist
-    # a WRONG (too-small) size_hint must not collect an unbounded edge
-    # set: the limit(threshold+1) guard detects the overflow and falls
-    # back to the distributed path (r5 ADVICE)
-    hinted = {(r.node, r.component)
-              for r in connected_components_auto(
-                  edges, driver_threshold=2, size_hint=1).collect()}
-    assert hinted == dist
+    assert star == ref
 
 
 def test_canonical_entities_singletons_and_merge(spark):
@@ -165,10 +173,10 @@ def test_canonical_entities_singletons_and_merge(spark):
     assert n[merged].n_surfaces >= 2
 
 
-def test_star_cc_matches_hashmin(spark):
+def test_star_components_matches_bfs(spark):
     import random
 
-    from gliner_spark.operators.canonicalize import connected_components_star
+    from gliner_spark.operators.canonicalize import star_components
 
     rng = random.Random(3)
     nodes = [f"n{i:03d}" for i in range(200)]
@@ -184,36 +192,10 @@ def test_star_cc_matches_hashmin(spark):
         a, b = rng.sample(range(len(nodes)), 2)
         if abs(a - b) < 5:
             edges.append((nodes[min(a, b)], nodes[max(a, b)]))
+    edges.append(("solo", "solo"))
     df = spark.createDataFrame(edges, "src string, dst string")
-    hashmin = {
-        r.node: r.component for r in connected_components(df).collect()
-    }
-    # driver_threshold=0 pins the star ITERATION itself (the
-    # size-adaptive shortcut would route this toy graph to the
-    # shared union-find, which the auto tests already cover)
-    star = {
-        r.node: r.component
-        for r in connected_components_star(
-            df, driver_threshold=0).collect()
-    }
-    assert star == hashmin and len(star) > 0
-    # the adaptive default must agree with the pinned iteration
-    adaptive = {
-        r.node: r.component
-        for r in connected_components_star(df).collect()
-    }
-    assert adaptive == hashmin
-    # star semantics are size-INDEPENDENT for self-loops too: the
-    # iteration's symmetrize drops (n, n), so the driver shortcut must
-    # as well — the output node universe must not change with
-    # driver_threshold (r6 review finding)
-    looped = spark.createDataFrame(
-        edges + [("solo", "solo")], "src string, dst string")
-    small_path = {r.node for r in
-                  connected_components_star(looped).collect()}
-    iter_path = {r.node for r in connected_components_star(
-        looped, driver_threshold=0).collect()}
-    assert small_path == iter_path and "solo" not in small_path
+    star = {r.node: r.component for r in star_components(df).collect()}
+    assert star == _bfs_components(edges) and len(star) > 0
 
 
 def test_embeddings_and_cosine_links(spark):

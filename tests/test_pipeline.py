@@ -567,20 +567,21 @@ def test_materialize_kg_partition_layout_and_pruning(spark, tmp_path):
     assert sorted(edges_back.columns) == sorted(kg.edges.columns)
 
 
-def test_connected_components_warns_when_unconverged():
+def test_star_components_warns_when_unconverged():
     import warnings
 
-    from gliner_spark.operators.canonicalize import connected_components
+    from gliner_spark.operators.canonicalize import star_components
     from gliner_spark.session import build_session
 
     spark = build_session(app_name="gliner-tests", cores=4)
-    # a 6-node chain needs >1 hash-min round; max_iters=1 must warn
+    # a chain needs more than one star round to reach the fixpoint;
+    # max_iters=1 must warn
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "src long, dst long"
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(chain, max_iters=1)
+        star_components(chain, max_iters=1)
         assert any("not converged" in str(x.message) for x in w)
 
 

@@ -9,8 +9,8 @@ from gliner_spark.kernels.scorer import ALL_LABELS
 from gliner_spark.operators.canonicalize import (
     canonical_entities,
     connected_components,
-    connected_components_star,
     nodes_table,
+    star_components,
 )
 from gliner_spark.operators.dedup import (
     exact_dup_groups,
@@ -130,7 +130,7 @@ def test_empty_dataframe_through_pipeline(spark):
 def test_empty_edges_connected_components(spark):
     empty = spark.createDataFrame([], "src string, dst string")
     assert connected_components(empty).count() == 0
-    assert connected_components_star(empty).count() == 0
+    assert star_components(empty).count() == 0
 
 
 def test_dedup_ops_on_nullish(spark, nullish_docs):

@@ -40,33 +40,10 @@ from __future__ import annotations
 import json
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
-
-def _rest(base: str, app_id: str, path: str):
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}{path}"
-    ) as r:
-        return json.load(r)
-
-
-def _completed_stages(base: str, app_id: str) -> dict:
-    out = {}
-    for s in _rest(base, app_id, "/stages?status=complete"):
-        out[(s["stageId"], s["attemptId"])] = s
-    return out
-
-
-def _task_ms(base: str, app_id: str, stage) -> tuple[float, float]:
-    sid, att = stage
-    d = _rest(
-        base, app_id,
-        f"/stages/{sid}/{att}/taskSummary?quantiles=0.5,1.0",
-    )
-    run = d["executorRunTime"]
-    return float(run[1]), float(run[0])  # (max, median)
+from stage_rest import completed_stages, task_ms  # noqa: E402
 
 
 def main() -> None:
@@ -161,12 +138,12 @@ def main() -> None:
         return (row.h, row.n)
 
     def measure(name: str, make_df) -> dict:
-        before = set(_completed_stages(base, app_id))
+        before = set(completed_stages(base, app_id))
         t0 = time.monotonic()
         make_df().write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
         time.sleep(0.3)
-        stages = _completed_stages(base, app_id)
+        stages = completed_stages(base, app_id)
         # two views of the variant's new shuffle-reading stages: the
         # HEAVIEST (largest max task — where wall time goes) and the
         # most SKEWED (largest max/median — where the hot key shows;
@@ -178,7 +155,7 @@ def main() -> None:
         for st, info in sorted(stages.items()):
             if st in before or not info.get("shuffleReadBytes", 0):
                 continue
-            m, md = _task_ms(base, app_id, st)
+            m, md = task_ms(base, app_id, st)
             rec = {
                 "stage": st[0],
                 "max_task_ms": round(m, 1),

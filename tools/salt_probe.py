@@ -42,33 +42,10 @@ from __future__ import annotations
 import json
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
-
-def _rest(base: str, app_id: str, path: str):
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app_id}{path}"
-    ) as r:
-        return json.load(r)
-
-
-def _completed_stages(base: str, app_id: str) -> dict:
-    out = {}
-    for s in _rest(base, app_id, "/stages?status=complete"):
-        out[(s["stageId"], s["attemptId"])] = s
-    return out
-
-
-def _task_ms(base: str, app_id: str, stage) -> tuple[float, float]:
-    sid, att = stage
-    d = _rest(
-        base, app_id,
-        f"/stages/{sid}/{att}/taskSummary?quantiles=0.5,1.0",
-    )
-    run = d["executorRunTime"]
-    return float(run[1]), float(run[0])  # (max, median)
+from stage_rest import completed_stages, task_ms  # noqa: E402
 
 
 def main() -> None:
@@ -144,13 +121,13 @@ def main() -> None:
 
     def measure(name: str, make_df, aqe: bool) -> dict:
         spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
-        before = set(_completed_stages(base, app_id))
+        before = set(completed_stages(base, app_id))
         t0 = time.monotonic()
         df = make_df()
         df.write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
         time.sleep(0.3)  # let the status store settle
-        stages = _completed_stages(base, app_id)
+        stages = completed_stages(base, app_id)
         # skew manifests on the SHUFFLE-CONSUMER side: among the
         # variant's new stages that read shuffle data, take the one
         # holding the slowest task (map stages are uniform by
@@ -159,7 +136,7 @@ def main() -> None:
         for st, info in stages.items():
             if st in before or not info.get("shuffleReadBytes", 0):
                 continue
-            m, md = _task_ms(base, app_id, st)
+            m, md = task_ms(base, app_id, st)
             if m > mx:
                 mx, med = m, md
         # hash AFTER stage collection so its stages land inside the
